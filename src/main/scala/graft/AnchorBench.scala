@@ -1,10 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Spark-side timing for the BASELINE.md external-anchor table
   * (round 18): run the named registry queries over a given corpus dir
-  * for N passes and print per-query min seconds as one JSON line —
+  * for N interleaved passes (canary before each, one after) and print
+  * per-query min seconds as one JSON line (-1 for a failed query, and
+  * the run exits non-zero) —
   * the Spark half of the engine-vs-DuckDB anchor protocol
   * (`tools/anchor_duckdb.py` is the DuckDB half). Usage:
   *
@@ -40,16 +40,15 @@ object AnchorBench {
         sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"),
         a.stripPrefix("objects=").toInt, dir)
     }
-    val mins = (1 to passes).map { _ =>
-      names.map { n =>
-        val t0 = System.nanoTime()
-        SparkEntry.queries(n)(spark, dir).count()
-        n -> (System.nanoTime() - t0) / 1e9
-      }.toMap
-    }.reduce((a, b) => a.map { case (k, v) => k -> math.min(v, b(k)) })
-    println(names.map(n => f""""$n":${mins(n)}%.3f""")
+    val t = BenchSession.timePasses(spark, dir, passes,
+      names.map(n => n -> SparkEntry.queries(n)))
+    println(t.mins.map { case (n, v) => f""""$n":$v%.3f""" }
       .mkString("""{"metric":"anchor_spark","dir":"""" + dir + "\",",
         ",", "}"))
+    t.errors.foreach { case (n, e) =>
+      System.err.println(s"[anchor] $n failed: $e")
+    }
     spark.stop()
+    if (t.errors.nonEmpty) sys.exit(1)
   }
 }

@@ -1,16 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+import java.nio.file.{Files, Paths}
+
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.sql.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = BenchSession.local()
     // Warm up the JVM/codegen/IO paths so the first measured query isn't
     // charged for session bootstrap.
     spark.range(1000).selectExpr("sum(id)").collect()
@@ -18,43 +13,10 @@ object Bench {
     // bench (but fatal JVM errors — OOM etc. — must still propagate)
     try spark.read.parquet(s"$sfDir/region.parquet").count()
     catch { case scala.util.control.NonFatal(_) => () }
-    // Two INTERLEAVED passes over the full registry, min per query
-    // across passes: the first pass pays one-time JIT/codegen that a
-    // long-lived cluster amortizes away, and interleaving means a
-    // multi-minute host-throttling window (the r07 bench poison: both
-    // back-to-back samples of one query landing inside the same slow
-    // window) can cover at most ONE of a query's two samples — the min
-    // then still reflects steady-state latency. Failures are surfaced
-    // in an "errors" map — a fast failure must not masquerade as a
-    // fast query.
-    val errors = scala.collection.mutable.LinkedHashMap[String, String]()
-    // Host-throttle canary: a fixed pure-CPU job (~0.2 s on this box
-    // unthrottled, 20x slower inside a throttle window — measured
-    // 4.0-4.6 s). Recording it per pass makes host state visible IN the
-    // artifact: a pass whose canary is >3x the best canary ran on a
-    // different machine, effectively, and its samples read accordingly.
-    def canary(): Double = {
-      val t0 = System.nanoTime()
-      spark.range(200000000L).selectExpr("sum(id * 3 % 7)").collect()
-      (System.nanoTime() - t0) / 1e9
-    }
-    val canaries = scala.collection.mutable.ArrayBuffer[Double]()
-    val passes = (1 to 2).map { _ =>
-      canaries += canary()
-      SparkEntry.queries.map { case (name, fn) =>
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case e: Throwable =>
-          errors.getOrElseUpdate(name, e.toString.take(200))
-        }
-        name -> (System.nanoTime() - t0) / 1e9
-      }
-    }
-    canaries += canary()
-    val results = SparkEntry.queries.map { case (name, _) =>
-      // a failed query reports -1, never its (fast) failure time
-      name -> (if (errors.contains(name)) -1.0
-               else passes.map(_(name)).min)
-    }
+    // Two interleaved passes over the full registry, min per query;
+    // failures are surfaced in an "errors" map and report -1.
+    val t = BenchSession.timePasses(spark, sfDir, 2, SparkEntry.queries.toSeq)
+    val results = t.mins
     def jstr(s: String): String = "\"" + s.flatMap {
       case '"' => "\\\""
       case '\\' => "\\\\"
@@ -63,10 +25,10 @@ object Bench {
     } + "\""
     val qs = results.map { case (k, v) => s"${jstr(k)}:" + v }
       .mkString("{", ",", "}")
-    val errs = errors.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }
+    val errs = t.errors.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }
       .mkString("{", ",", "}")
-    val total = results.values.filter(_ >= 0).sum
-    val cjson = canaries.map(c => f"$c%.3f").mkString("[", ",", "]")
+    val total = results.map(_._2).filter(_ >= 0).sum
+    val cjson = t.canaries.map(c => f"$c%.3f").mkString("[", ",", "]")
     val full =
       s"""{"metric":"total","value":$total,"unit":"sec","canary":$cjson,"queries":$qs,"errors":$errs,"sf":"$sfDir"}"""
     // The full-precision line goes to BENCH.json — it is ~3 KB for 100
@@ -76,11 +38,14 @@ object Bench {
     // total + errors + as many queries as fit (slowest first, 3-decimal
     // seconds — the slow tail is what grading compares), with an
     // explicit omitted count so truncation is visible, never silent.
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get("BENCH.json"), (full + "\n").getBytes("UTF-8"))
+    // Both files land in one absolute directory (the JVM's working
+    // directory: the repo root under sbt), logged to stderr so their
+    // location is visible however the main was launched.
+    val outDir = Paths.get(sys.props("user.dir")).toAbsolutePath
+    Files.write(outDir.resolve("BENCH.json"), (full + "\n").getBytes("UTF-8"))
     val budget = 1800
     def fmt(v: Double) = if (v < 0) "-1" else f"$v%.3f"
-    val bySlowest = results.toSeq.sortBy { case (_, v) => -v }
+    val bySlowest = results.sortBy { case (_, v) => -v }
       .map { case (k, v) => s"${jstr(k)}:${fmt(v)}" }
     val fixed =
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec","sf":"$sfDir","canary":$cjson,"errors":$errs,"full":"BENCH.json","n":${results.size},"omitted":NN,"queries":{}}"""
@@ -95,14 +60,15 @@ object Bench {
     // The compact line is ALSO a fixed artifact file (the driver has
     // parsed stdout's copy as null in every round to date — sbt
     // decoration + trailing lines; a file sidesteps the scrape), and
-    // stdout's copy prints AFTER spark.stop() so no Spark shutdown
-    // logging can land between it and process exit. The measured
-    // methodology above is unchanged.
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get("BENCH_COMPACT.json"),
+    // stdout's copy prints AFTER spark.stop() — even when stop throws —
+    // so no Spark shutdown logging can land between it and process exit.
+    Files.write(outDir.resolve("BENCH_COMPACT.json"),
       (json + "\n").getBytes("UTF-8"))
-    spark.stop()
-    println(json)
-    System.out.flush()
+    System.err.println(s"[bench] wrote BENCH.json and BENCH_COMPACT.json in $outDir")
+    try spark.stop()
+    finally {
+      println(json)
+      System.out.flush()
+    }
   }
 }

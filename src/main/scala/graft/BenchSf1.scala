@@ -83,21 +83,8 @@ object BenchSf1 {
     // still matches the natural sf0.1 corpus.
     SfSynth.ensure(spark, base, copies, dir)
 
-    val errors = scala.collection.mutable.LinkedHashMap[String, String]()
-    def canary(): Double = BenchSession.canary(spark)
-    val canaries = scala.collection.mutable.ArrayBuffer[Double]()
-    val passes = (1 to 2).map { _ =>
-      canaries += canary()
-      Heavy.map { name =>
-        val t0 = System.nanoTime()
-        try { SparkEntry.queries(name)(spark, dir).count() }
-        catch { case e: Throwable =>
-          errors.getOrElseUpdate(name, e.toString.take(200))
-        }
-        name -> (System.nanoTime() - t0) / 1e9
-      }.toMap
-    }
-    canaries += canary()
+    val heavy = Heavy.map(n => n -> SparkEntry.queries(n))
+    val sf1 = BenchSession.timePasses(spark, dir, 2, heavy)
 
     // dd_semdedup with nList SCALED with the corpus (16 → 160 at 10×):
     // within-cell pairwise work is Θ(n²/nList), so a fixed nList grows
@@ -105,30 +92,24 @@ object BenchSf1 {
     // ∝ corpus) keeps cell population constant. Measure the scaled
     // point so the fixed-nList ratio reads as the parameterization,
     // not the engine.
-    val semScaled = (1 to 2).map { _ =>
-      val t0 = System.nanoTime()
-      graft.operators.Similarity.semDedup(
-        spark.read.parquet(s"$dir/embeddings.parquet"),
-        "vec_id", "embedding", 0.4, nList = 16 * copies, refineIters = 2)
-        .count()
-      (System.nanoTime() - t0) / 1e9
-    }.min
     // …and the STEADY-STATE form at scaled nList: quantizer trained
     // once (untimed — the persisted-artifact model, dd_semdedup_indexed
     // at sf0.1), per-fold cost = assignment + bounded-cell pairwise.
-    // The in-query Lloyd pass is Θ(n·nList) and dominates semScaled;
-    // production never pays it per run.
+    // The in-query Lloyd pass is Θ(n·nList) and dominates the scaled
+    // form; production never pays it per run.
     val sf1Embs = spark.read.parquet(s"$dir/embeddings.parquet")
     val sf1Prep = graft.operators.Similarity
       .prepared(sf1Embs, "vec_id", "embedding").localCheckpoint(true)
     val sf1Cents = graft.operators.Similarity
       .refinedCentroids(sf1Prep, 16 * copies, 2).localCheckpoint(true)
-    val semSteady = (1 to 2).map { _ =>
-      val t0 = System.nanoTime()
-      graft.operators.Similarity.semDedupWith(sf1Prep, sf1Cents, 0.4)
-        .count()
-      (System.nanoTime() - t0) / 1e9
-    }.min
+    val sem = BenchSession.timePasses(spark, dir, 2, Seq(
+      ("dd_semdedup_scaled_nlist", (s, d) =>
+        graft.operators.Similarity.semDedup(
+          s.read.parquet(s"$d/embeddings.parquet"),
+          "vec_id", "embedding", 0.4, nList = 16 * copies,
+          refineIters = 2)),
+      ("dd_semdedup_steady_scaled", (_, _) =>
+        graft.operators.Similarity.semDedupWith(sf1Prep, sf1Cents, 0.4))))
 
     // ---- PURE-fold steady-state receipts (round-15): the oracle-
     // gated fold queries (dd_map_append, sim_ivfpq_append) pay
@@ -192,38 +173,29 @@ object BenchSf1 {
       } finally SfSynth.rmTree(tmp)
     })
 
-    // folded sf0.1 reference: per-query min across the committed fold
-    // and this JVM's own two sf0.1 passes (same host, same session —
-    // removes cross-host canary skew from the ratio)
-    val local01 = (1 to 2).map { _ =>
-      Heavy.map { name =>
-        val t0 = System.nanoTime()
-        try { SparkEntry.queries(name)(spark, base).count() }
-        catch { case _: Throwable => () }
-        name -> (System.nanoTime() - t0) / 1e9
-      }.toMap
-    }
+    // sf0.1 reference: this JVM's own two sf0.1 passes (same host,
+    // same session — removes cross-host canary skew from the ratio)
+    val local01 = BenchSession.timePasses(spark, base, 2, heavy)
 
-    val rows = Heavy.map { name =>
-      val t1 = if (errors.contains(name)) -1.0 else passes.map(_(name)).min
-      val t01 = local01.map(_(name)).min
-      (name, t1, t01, if (t01 > 0 && t1 > 0) t1 / t01 else -1.0)
-    } ++ {
-      val t01 = local01.map(_("dd_semdedup")).min
-      Seq(
-        ("dd_semdedup_scaled_nlist", semScaled, t01, semScaled / t01),
-        ("dd_semdedup_steady_scaled", semSteady, t01, semSteady / t01),
-        mapSteady, annSteady)
-    }
+    def ratio(t1: Double, t01: Double) =
+      if (t01 > 0 && t1 > 0) t1 / t01 else -1.0
+    val ref01 = local01.mins.toMap
+    val rows = (sf1.mins.map { case (name, t1) =>
+      (name, t1, ref01(name), ratio(t1, ref01(name)))
+    } ++ sem.mins.map { case (name, t1) =>
+      (name, t1, ref01("dd_semdedup"), ratio(t1, ref01("dd_semdedup")))
+    }) :+ mapSteady :+ annSteady
+    val timings = Seq(sf1, sem, local01)
     def jstr(s: String) = "\"" + s + "\""
     val qjson = rows.map { case (n, t1, t01, r) =>
       s"${jstr(n)}:{" +
         f""""sf1_sec":$t1%.3f,"sf01_sec":$t01%.3f,"ratio":$r%.2f}"""
     }.mkString("{", ",", "}")
-    val cjson = canaries.map(c => f"$c%.3f").mkString("[", ",", "]")
+    val cjson = timings.flatMap(_.canaries).map(c => f"$c%.3f")
+      .mkString("[", ",", "]")
     val json =
       s"""{"metric":"sf1_scaling","copies":$copies,"canary":$cjson,""" +
-        s""""queries":$qjson,"errors":${errors.size}}"""
+        s""""queries":$qjson,"errors":${timings.map(_.errors.size).sum}}"""
     java.nio.file.Files.write(
       java.nio.file.Paths.get("BENCH_sf1.json"),
       (json + "\n").getBytes("UTF-8"))

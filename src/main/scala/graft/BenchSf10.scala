@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** One-decade-further scale receipt (round 18, r17 verdict item 4):
@@ -40,27 +40,26 @@ object BenchSf10 {
     SfSynth.ensure(spark, base, 10, dir1)
     SfSynth.ensure(spark, base, 100, dir10)
 
-    val errors = scala.collection.mutable.LinkedHashMap[String, String]()
-    def canary(): Double = BenchSession.canary(spark)
-    val canaries = scala.collection.mutable.ArrayBuffer[Double]()
-    def passes(dir: String): Map[String, Double] = {
-      canaries += canary()
-      (1 to 2).map { _ =>
-        Steady.map { name =>
-          val t0 = System.nanoTime()
-          try { SparkEntry.queries(name)(spark, dir).count() }
-          catch { case e: Throwable =>
-            errors.getOrElseUpdate(s"$name@$dir", e.toString.take(200))
-          }
-          name -> (System.nanoTime() - t0) / 1e9
-        }.toMap
-      }.reduce((a, b) => a.map { case (k, v) => k -> math.min(v, b(k)) })
+    // every timed query, tagged with its corpus dir (errors are
+    // reported as name@dir, canaries in run order)
+    val timings = scala.collection.mutable.ArrayBuffer[
+      (String, BenchSession.Timings)]()
+    def minsAt(dir: String,
+        qs: Seq[(String, (SparkSession, String) => DataFrame)]
+    ): Map[String, Double] = {
+      val t = BenchSession.timePasses(spark, dir, 2, qs)
+      timings += dir -> t
+      t.mins.toMap
     }
+    /** Two-pass min of one query over state its caller built untimed. */
+    def minOf(dir: String, name: String)(q: => DataFrame): Double =
+      minsAt(dir, Seq((name, (_, _) => q)))(name)
 
     // order matters for fairness: sf1 first, then sf10 (JIT warmed
     // equally by pass structure; each scale gets its own two passes)
-    val t1 = passes(dir1)
-    val t10 = passes(dir10)
+    val steady = Steady.map(n => n -> SparkEntry.queries(n))
+    val t1 = minsAt(dir1, steady)
+    val t10 = minsAt(dir10, steady)
 
     // the ANN fold steady pair: base trained UNTIMED over the ~80%
     // md5 slice, each pass folds a DIFFERENT ~10% batch (folds mutate
@@ -114,13 +113,10 @@ object BenchSf10 {
         spark, src, docs.filter(h < "cc"), "doc_id", "text")
       val probe = docs.filter(h >= "cc").orderBy("doc_id").limit(1000)
         .select("doc_id", "text").localCheckpoint(true)
-      (1 to 2).map { _ =>
-        timed {
-          graft.operators.Dedup.incrementalDedupIndexed(
-            bands, sets, probe, "doc_id", "text", 0.8).count()
-          ()
-        }
-      }.min
+      minOf(src, "dd_incremental_fixed_probe") {
+        graft.operators.Dedup.incrementalDedupIndexed(
+          bands, sets, probe, "doc_id", "text", 0.8)
+      }
     }
     // production ANN parameterization: nList ∝ corpus with nProbe
     // CONSTANT — probed work per query = nProbe · (N/nList) stays
@@ -134,14 +130,11 @@ object BenchSf10 {
         .filter(size(col("qv")) === 64).localCheckpoint(true)
       val (cents, cbRows, codes) =
         graft.sources.Models.ivfPqIndex(spark, src, nList = nList)
-      (1 to 2).map { _ =>
-        timed {
-          graft.operators.Similarity.ivfPqScoreWith(prep, cents, cbRows,
-            codes, k = 5, queryLimit = 10L, nProbe = 8, m = 8,
-            dim = 64, rerank = 50).count()
-          ()
-        }
-      }.min
+      minOf(src, "sim_ivfpq_scaled_nlist") {
+        graft.operators.Similarity.ivfPqScoreWith(prep, cents, cbRows,
+          codes, k = 5, queryLimit = 10L, nProbe = 8, m = 8,
+          dim = 64, rerank = 50)
+      }
     }
     // constant-selectivity BM25 receipt: the registry query's terms
     // are the corpus's top-df tokens — at sf10 those are the
@@ -158,29 +151,25 @@ object BenchSf10 {
       val terms = df.filter(col("tok").startsWith("c7x"))
         .orderBy(col("df").desc, col("tok")).offset(10).limit(5)
         .select("tok").localCheckpoint(true)
-      (1 to 2).map { _ =>
-        timed {
-          graft.sources.Models.postings(spark, src)
-            .join(broadcast(terms), "tok")
-            .join(broadcast(df), "tok")
-            .join(lens, "doc_id")
-            .crossJoin(broadcast(tot))
-            .withColumn("idf",
-              log((lit(2L) * (col("nn") - col("df")) + lit(1L))
-                .cast("double")) -
-                log((lit(2L) * col("df") + lit(1L)).cast("double")))
-            .withColumn("t",
-              col("idf") * (col("tf").cast("double") * lit(2.2)) /
-                (col("tf").cast("double") + (lit(0.3) + lit(0.9) *
-                  ((col("dl") * col("nn")).cast("double") /
-                    col("s").cast("double")))))
-            .groupBy("doc_id")
-            .agg(count(lit(1)).as("n_hits"), sum("t").as("sc"))
-            .orderBy(col("sc").desc, col("doc_id")).limit(20)
-            .count()
-          ()
-        }
-      }.min
+      minOf(src, "tx_bm25_local_terms") {
+        graft.sources.Models.postings(spark, src)
+          .join(broadcast(terms), "tok")
+          .join(broadcast(df), "tok")
+          .join(lens, "doc_id")
+          .crossJoin(broadcast(tot))
+          .withColumn("idf",
+            log((lit(2L) * (col("nn") - col("df")) + lit(1L))
+              .cast("double")) -
+              log((lit(2L) * col("df") + lit(1L)).cast("double")))
+          .withColumn("t",
+            col("idf") * (col("tf").cast("double") * lit(2.2)) /
+              (col("tf").cast("double") + (lit(0.3) + lit(0.9) *
+                ((col("dl") * col("nn")).cast("double") /
+                  col("s").cast("double")))))
+          .groupBy("doc_id")
+          .agg(count(lit(1)).as("n_hits"), sum("t").as("sc"))
+          .orderBy(col("sc").desc, col("doc_id")).limit(20)
+      }
     }
     // Maintenance-lifecycle receipt (round 19, r18 verdict item 5):
     // one fold→compact→vacuum pass per scale, the maint_vacuum_cutover
@@ -274,26 +263,20 @@ object BenchSf10 {
     val sn10 = scaledNList(dir10, 160)
     val bl1 = bm25LocalTerms(dir1)
     val bl10 = bm25LocalTerms(dir10)
-    canaries += canary()
-
-    // a registry query that FAILED at either scale recorded its
-    // time-to-failure, not a measurement: mark the row itself (ratio
-    // -1 + failed flag) so a reader of the queries block never reads a
-    // non-measurement as a scaling receipt without cross-referencing
-    // the errors block (ADVICE r18)
-    def failedAt(name: String): Boolean =
-      errors.contains(s"$name@$dir1") || errors.contains(s"$name@$dir10")
-    val rows = Steady.map { name =>
-      (name, t10(name), t1(name),
-        if (failedAt(name) || t1(name) <= 0) -1.0
-        else t10(name) / t1(name),
-        failedAt(name))
-    } :+ ("sim_ivfpq_append_steady", ann10, ann1, ann10 / ann1, false) :+
-      ("dd_incremental_fixed_probe", fp10, fp1, fp10 / fp1, false) :+
-      ("sim_ivfpq_scaled_nlist", sn10, sn1, sn10 / sn1, false) :+
-      ("tx_bm25_local_terms", bl10, bl1, bl10 / bl1, false) :+
-      ("maint_lifecycle", ml10, ml1, ml10 / ml1, false) :+
-      ("dd_map_fold_steady", mf10, mf1, mf10 / mf1, false)
+    // a query that FAILED at either scale reports -1 there: mark the
+    // row itself (ratio -1 + failed flag) so a reader of the queries
+    // block never reads a non-measurement as a scaling receipt without
+    // cross-referencing the errors block (ADVICE r18)
+    val rows = (Steady.map(n => (n, t10(n), t1(n))) ++ Seq(
+      ("sim_ivfpq_append_steady", ann10, ann1),
+      ("dd_incremental_fixed_probe", fp10, fp1),
+      ("sim_ivfpq_scaled_nlist", sn10, sn1),
+      ("tx_bm25_local_terms", bl10, bl1),
+      ("maint_lifecycle", ml10, ml1),
+      ("dd_map_fold_steady", mf10, mf1))).map { case (n, a10, a1) =>
+      val failed = a10 < 0 || a1 < 0
+      (n, a10, a1, if (failed || a1 == 0) -1.0 else a10 / a1, failed)
+    }
 
     def jstr(s: String) = "\"" + s + "\""
     val qjson = rows.map { case (n, a10, a1, r, failed) =>
@@ -301,9 +284,12 @@ object BenchSf10 {
         f""""sf10_sec":$a10%.3f,"sf1_sec":$a1%.3f,"ratio":$r%.2f""" +
         (if (failed) ""","failed":true}""" else "}")
     }.mkString("{", ",", "}")
-    val cjson = canaries.map(c => f"$c%.3f").mkString("[", ",", "]")
-    val ejson = errors.map { case (k, v) =>
-      s"${jstr(k)}:${jstr(v.replace("\"", "'"))}"
+    val cjson = timings.flatMap(_._2.canaries).map(c => f"$c%.3f")
+      .mkString("[", ",", "]")
+    val ejson = timings.flatMap { case (dir, t) =>
+      t.errors.map { case (k, v) =>
+        s"${jstr(s"$k@$dir")}:${jstr(v.replace("\"", "'"))}"
+      }
     }.mkString("{", ",", "}")
     val json =
       s"""{"metric":"sf10_scaling","copies":100,"canary":$cjson,""" +

@@ -1,54 +1,24 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Round-21 optimization workbench (measurement only — never part of
-  * the driver contract). Three subcommands over the registered queries:
+  * the driver contract). Two subcommands over the registered queries:
   *
   *   plan <outDir> <name...>   write .explain("formatted") per query
-  *   time <repeats> <name...>  min-of-N wall clock per query (Bench's
-  *                             `.count()` action), with a CPU canary
-  *                             before and after so host-throttle
-  *                             windows are visible next to each number
   *   jobs <name>               per-Spark-job wall-clock breakdown of
   *                             one query invocation (job description →
   *                             seconds), for locating which of a
   *                             multi-job query's stages carries the
-  *                             cost
+  *                             cost, with a CPU canary before and after
   *
-  * Session recipe matches Bench exactly (local[$SPARK_GRAFT_CPUS],
-  * shuffle.partitions = cpus) so measurements transfer.
+  * Min-of-N timing is `AnchorBench`; conf experiments pass `-Dspark.*`
+  * properties, which the session builder reads.
   */
 object OptTool {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // measurement-only conf overrides, e.g.
-    //   SPARK_GRAFT_EXTRA_CONF="spark.sql.adaptive.enabled=false;k=v"
-    val extra = sys.env.getOrElse("SPARK_GRAFT_EXTRA_CONF", "")
-      .split(';').filter(_.contains('=')).map { kv =>
-        val Array(k, v) = kv.split("=", 2); (k, v)
-      }
-    val b0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.sql.GraftExtensions)
-    val spark = extra.foldLeft(b0) { case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
-    // same warm-up as Bench
-    spark.range(1000).selectExpr("sum(id)").collect()
-    try spark.read.parquet(s"$sfDir/region.parquet").count()
-    catch { case scala.util.control.NonFatal(_) => () }
-
-    def canary(): Double = {
-      val t0 = System.nanoTime()
-      spark.range(200000000L).selectExpr("sum(id * 3 % 7)").collect()
-      (System.nanoTime() - t0) / 1e9
-    }
+    val spark = BenchSession.local()
     val queries = SparkEntry.queries
 
     args.toList match {
@@ -100,23 +70,6 @@ object OptTool {
           println(s"[plan] wrote $outDir/$n.txt (${seen.size} intermediate QEs)")
         }
 
-      case "time" :: repeats :: names =>
-        val r = repeats.toInt
-        val c0 = canary()
-        val rows = names.map { n =>
-          val ts = (1 to r).map { _ =>
-            val t0 = System.nanoTime()
-            queries(n)(spark, sfDir).count()
-            (System.nanoTime() - t0) / 1e9
-          }
-          n -> ts
-        }
-        val c1 = canary()
-        println(f"""{"canary":[$c0%.3f,$c1%.3f],""" + rows.map {
-          case (n, ts) =>
-            s""""$n":{"min":${f"${ts.min}%.3f"},"all":[${ts.map(t => f"$t%.3f").mkString(",")}]}"""
-        }.mkString(",") + "}")
-
       case "jobs" :: name :: Nil =>
         val recs = new java.util.concurrent.ConcurrentHashMap[Int, (String, Long)]()
         val done = scala.collection.concurrent.TrieMap[Int, Double]()
@@ -136,13 +89,16 @@ object OptTool {
         spark.sparkContext.addSparkListener(listener)
         // one warm pass (JIT/codegen), then the measured pass
         queries(name)(spark, sfDir).count()
+        val c0 = BenchSession.canary(spark)
         recs.clear(); done.clear()
         val t0 = System.nanoTime()
         queries(name)(spark, sfDir).count()
         val total = (System.nanoTime() - t0) / 1e9
         Thread.sleep(500) // let the async listener bus drain
         val items = done.toSeq.sortBy(_._1)
-        println(f"[jobs] $name total=$total%.3f s, ${items.size} jobs")
+        val c1 = BenchSession.canary(spark)
+        println(f"[jobs] $name total=$total%.3f s, ${items.size} jobs, " +
+          f"canary $c0%.3f/$c1%.3f s")
         items.foreach { case (id, sec) =>
           val desc = Option(recs.get(id)).map(_._1).getOrElse("")
           println(f"  job $id%4d  $sec%7.3f s  $desc")
@@ -151,8 +107,8 @@ object OptTool {
           f"(gap = ${total - items.map(_._2).sum}%.3f s driver/planning)")
 
       case other =>
-        System.err.println(s"usage: plan <outDir> <names...> | " +
-          s"time <repeats> <names...> | jobs <name>; got: $other")
+        System.err.println(
+          s"usage: plan <outDir> <names...> | jobs <name>; got: $other")
         sys.exit(2)
     }
     spark.stop()

@@ -102,16 +102,9 @@ object SkewBench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val timeoutSec =
       sys.env.getOrElse("SPARK_GRAFT_SKEW_TIMEOUT", "300").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
+    val spark = BenchSession.local()
     spark.range(1000).selectExpr("sum(id)").collect() // warm-up
 
     val runs = Seq.newBuilder[Run]

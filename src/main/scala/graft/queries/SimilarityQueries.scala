@@ -13,6 +13,10 @@ import graft.operators.Similarity
   * planes, banding, and rescoring). */
 object SimilarityQueries {
 
+  /** Bound on sim_ivfpq_sweep's six concurrent ADC materializations:
+    * seconds at sf0.1 and minutes at sf10, so past this one is hung. */
+  private val SweepArmTimeout = scala.concurrent.duration.Duration(30, "min")
+
   // Shared DuckDB prelude: quantized vectors + exact squared norms.
   private val duckPrep =
     """q AS (
@@ -1125,9 +1129,13 @@ object SimilarityQueries {
                   nProbe, 8)
                 .localCheckpoint(true))
             }
-            scala.concurrent.Await.result(
-              scala.concurrent.Future.sequence(fs),
-              scala.concurrent.duration.Duration.Inf)
+            try scala.concurrent.Await.result(
+              scala.concurrent.Future.sequence(fs), SweepArmTimeout)
+            catch { case _: java.util.concurrent.TimeoutException =>
+              throw new java.util.concurrent.TimeoutException(
+                s"sim_ivfpq_sweep ADC arms on $d did not finish within " +
+                  s"$SweepArmTimeout")
+            }
           } finally pool.shutdown()
         val arms = for {
           (ksub, nProbe, scored) <- scoreds

@@ -40,10 +40,15 @@ object SourceQueries {
     // and the caught FileNotFoundException is logged WARN WITH ITS
     // FULL STACK — the lone "[error]" stack in every BENCH_r* tail,
     // half the reason the driver's JSON scrape failed. Same file set:
-    // the dir is flat and every file matches.)
+    // the dir is flat and every file matches.) recursiveFileLookup is
+    // pinned off for parity with the oracle's read_blob glob, which
+    // matches top-level files only. Spark's directory listing still
+    // descends into plain subdirectories, so parity also relies on
+    // this dir staying flat.
     "src_binaryfile_scan" -> QueryDef(
       (s, _) => s.read.format("binaryFile")
         .option("pathGlobFilter", "*.parquet")
+        .option("recursiveFileLookup", "false")
         .load(BinDir)
         .select(regexp_extract(col("path"), "([^/]+)$", 1).as("file"),
           col("length"),

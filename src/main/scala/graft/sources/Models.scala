@@ -51,6 +51,10 @@ object Models {
     * stale model would fail the hash gate, silently-correct-looking. */
   val ModelVersion = 1
 
+  /** Bound on one fold-guard presence probe: each is a read-only scan
+    * that takes seconds even at sf10, so past this it is hung. */
+  private val FoldProbeTimeout = scala.concurrent.duration.Duration(30, "min")
+
   private val vocabCache = TrieMap.empty[String, Seq[String]]
 
   /** Test seam for the crash-injection property suite: invoked at
@@ -1261,11 +1265,17 @@ object Models {
             val sF = posT.map(t =>
               scala.concurrent.Future(freshFor(presentIn(t))))
             val lF = scala.concurrent.Future(freshFor(presentIn(lensT)))
-            import scala.concurrent.duration.Duration
-            (scala.concurrent.Await.result(pF, Duration.Inf),
-              sF.map(scala.concurrent.Await.result(_, Duration.Inf))
-                .getOrElse(b),
-              scala.concurrent.Await.result(lF, Duration.Inf),
+            def await(f: scala.concurrent.Future[DataFrame],
+                probe: String): DataFrame =
+              try scala.concurrent.Await.result(f, FoldProbeTimeout)
+              catch { case _: java.util.concurrent.TimeoutException =>
+                throw new java.util.concurrent.TimeoutException(
+                  s"postingsAppend guard probe '$probe' on $sfDir did " +
+                    s"not finish within $FoldProbeTimeout")
+              }
+            (await(pF, "postings"),
+              sF.map(await(_, "positional postings")).getOrElse(b),
+              await(lF, "doc lengths"),
               applied)
           } finally pool.shutdown()
         }
